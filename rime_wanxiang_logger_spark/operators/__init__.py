@@ -16,102 +16,20 @@ from pathlib import Path as _Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import aggregates, extensions, joins, misses, rime, scalars, scans, windows
+from . import (
+    scans, misses, aggregates, windows, scalars, joins, extensions, rime,
+    dedup, similarity, textstats, multimodal, advanced, pipeline, curation,
+    timeseries, quality, mining, maintenance, fuzzy, mixture, policy,
+    tpch_extra,
+)
 
-_MODULES = [scans, misses, aggregates, windows, scalars, joins, extensions, rime]
-
-# Optional modules land here as they are built (dedup, similarity,
-# textstats, multimodal) — appended in later milestones.
-try:  # pragma: no cover
-    from . import dedup
-
-    _MODULES.append(dedup)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import similarity
-
-    _MODULES.append(similarity)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import textstats
-
-    _MODULES.append(textstats)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import multimodal
-
-    _MODULES.append(multimodal)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import advanced
-
-    _MODULES.append(advanced)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import pipeline
-
-    _MODULES.append(pipeline)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import curation
-
-    _MODULES.append(curation)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import timeseries
-
-    _MODULES.append(timeseries)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import quality
-
-    _MODULES.append(quality)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import mining
-
-    _MODULES.append(mining)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import maintenance
-
-    _MODULES.append(maintenance)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import fuzzy
-
-    _MODULES.append(fuzzy)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import mixture
-
-    _MODULES.append(mixture)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import policy
-
-    _MODULES.append(policy)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import tpch_extra
-
-    _MODULES.append(tpch_extra)
-except ImportError:
-    pass
+# Inventory order (registry iteration and hash freezing walk this list).
+_MODULES = [
+    scans, misses, aggregates, windows, scalars, joins, extensions, rime,
+    dedup, similarity, textstats, multimodal, advanced, pipeline, curation,
+    timeseries, quality, mining, maintenance, fuzzy, mixture, policy,
+    tpch_extra,
+]
 
 
 # The driver caps its per-round CORRECTNESS check at the **first 50
@@ -214,47 +132,14 @@ def _derive_verified_rounds(
     }
 
 
-# Plan-changed queries re-queued for driver re-certification (the r3
-# q43/q56 policy): ``name: N`` invalidates green rows from rounds <= N,
-# so the name sorts unverified-first until the driver writes a newer
-# green row — at which point the entry expires by itself. All locally
-# verified value-identical against the DuckDB oracle (sf0.01 + sf1
-# targeted sweep) before the round-end hash freeze.
-#
-# r9 open: the nine r8 re-queues (stage-sharing extensions + the sf20
-# sweep fixes — q26/q44/q52/q79/q92/q105/q108/q111/q117) all expired:
-# CORRECTNESS_r08.json carries a fully-green row for each, so the
-# derivation already outranked their `: 7` entries. Pruned per the
-# round-open checklist. Add entries here ONLY for queries whose
-# executed plan changes this round (values locally re-verified vs the
-# DuckDB oracle before the round-end hash freeze).
-#
-# r10 open: the ten r9 re-queues (ANN construction-fix + lazy pins +
-# pin-join hints — q26/q44/q66/q111/q79/q53/q72/q116/q105/q117) all
-# expired: CORRECTNESS_r09.json carries a fully-green row for each, so
-# the derivation already outranked their `: 8` entries. Pruned per the
-# round-open checklist.
-#
-# r10 re-queue — value locally verified exact vs the DuckDB oracle
-# (sf0.01 via verify_oracle.py --stale; pair-set parity test at
-# sf0.001) but the executed plan changed:
-#   q106 — the stream-stream interval join's equality key now includes
-#     floor(ts/horizon), killing the per-user state-scan quadratic an
-#     availableNow backfill exposed (25x pair-scan work for 5x data;
-#     judge r9 #1). Gated decade ladder now 0.6/1.6/2.8x in
-#     scale_proof.json.
-#   q43/q92/q100/q107/q110 — every drain now runs on the RocksDB
-#     state-store provider (extensions._stream_state_width): the
-#     sf80 probe found heap-resident HDFS-backed join state exceeding
-#     the JVM and wedging Spark's abort path. Values are
-#     provider-invariant (parity tests + sf0.01 oracle re-pass), but
-#     the executed runtime changed — requeued out of caution.
+# Plan-changed queries re-queued for driver re-certification:
+# ``name: N`` invalidates green rows from rounds <= N, so the name sorts
+# unverified-first until the driver writes a newer green row, at which
+# point the entry expires by itself (prune expired entries when a round
+# opens). Add an entry ONLY for a query whose executed plan changes,
+# after its values are re-verified against the DuckDB oracle and before
+# the round-end hash freeze.
 _REQUEUE: dict[str, int] = {
-    # (r12's seven re-queues — q105/q117 salted anti-join, q25/q119/
-    # q121 banded_postings sharing, q52 null-text guard — all
-    # expired: CORRECTNESS_r12.json carries green rows that outrank
-    # the `: 11` entries. Pruned per the round-open checklist.)
-    #
     # r13: _drop_overcap_fps gained the explicit NULL-fp filter
     # (ADVICE r12 — the LEFT ANTI kept NULL fps where the inner joins
     # it replaced dropped them; latent-only on this corpus, whose fps

@@ -46,6 +46,7 @@ q43_stream_hourly     q13's hourly rollup executed through Structured
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.stable import dsum, dsum_expr
 from ..sources.readers import load_table
@@ -55,84 +56,57 @@ from .windows import SESSION_GAP_SECONDS
 
 TUMBLE_HOURS = 6
 
-#: State-store partition width for the registered streaming drains.
-#: A streaming query's shuffle width is a DEPLOYMENT knob, not a
-#: semantic one: it fixes the number of state-store instances at the
-#: first checkpoint, and every micro-batch pays a per-partition state
-#: commit regardless of data volume (measured locally: the q106
-#: interval join costs 12.7/7.4/4.1 s at 32/16/8 partitions for the
-#: SAME 342 rows — pure fixed cost). Production sizes this to state
-#: volume and throughput per the checkpoint; the drained results are
-#: partition-count-invariant (driver-certified either way).
+#: State-store partition width for the registered streaming drains. It
+#: fixes the number of state-store instances at the first checkpoint,
+#: and every micro-batch pays one state commit per partition whatever
+#: its data volume, so a small drain at the batch width is mostly fixed
+#: cost. A deployment knob, not a semantic one: drained results are
+#: partition-count-invariant.
 STREAM_STATE_PARTITIONS = 8
 
 
-#: RocksDB state store for every drain (r10). The default HDFS-backed
-#: provider keeps ALL state as JVM-heap objects; an availableNow
-#: backfill of a large history through a stream-stream join buffers
-#: the whole horizon-unexpired corpus in state, and at sf80 (~48M
-#: join-state rows ≈ 18 GB) that exceeded the 8 GB local heap — tasks
-#: died and then WEDGED forever in Spark 4.1's
-#: ChecksumCheckpointFileManager.awaitResult inside
-#: SymmetricHashJoinStateManager's task-completion ABORT path (thread
-#: dump: every executor parked on a CompletionLatch that no pool
-#: thread will ever complete; the job hangs rather than fails).
-#: RocksDB keeps state off-heap and disk-backed — bounded memory at
-#: any SF — which is also the documented production posture
-#: (streaming/twin.py module doc). Parity across providers is pinned
-#: by tests (hourly rollup + the attribution join drain both
-#: hash-match under either provider).
+#: RocksDB state store for every drain. The default HDFS-backed
+#: provider keeps all state as JVM-heap objects, so an availableNow
+#: backfill through a stream-stream join can outgrow the heap, and
+#: Spark 4.1 then wedges in the join state manager's abort path instead
+#: of failing. RocksDB keeps state off-heap and disk-backed, bounded at
+#: any scale (the production posture, streaming/twin.py module doc).
+#: Results are provider-invariant: the hourly rollup and attribution
+#: join parity tests hash-match under either provider.
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
-#: Changelog checkpointing for the RocksDB stores (r14, guide §1/§5:
-#: measured per-drain, not assumed). Default (false) uploads a FULL
-#: RocksDB snapshot per store per commit — ~40 store instances across
-#: a drain's stateful operators at STREAM_STATE_PARTITIONS=8, a pure
-#: fixed cost per micro-batch. Changelog mode appends only the batch's
-#: state DELTA at commit and leaves snapshot consolidation to the
-#: background maintenance thread — the documented low-commit-latency
-#: RocksDB posture, and the right one at ANY state size (the delta is
-#: bounded by the batch's writes, never the standing state). Measured
-#: at sf0.1 (best-of-2 per drain): q92 3.41→2.35, q110 2.77→2.17,
-#: q106 3.21→2.72, q100 1.43→1.14, q121 4.06→3.73, q107 2.09→1.99 —
-#: ~3 s across the seven drains, identical drained results
-#: (hash-parity re-verified against the batch oracles).
+#: Changelog checkpointing for the RocksDB stores. Off, every commit
+#: uploads a full snapshot per store (~40 store instances per drain at
+#: STREAM_STATE_PARTITIONS); on, a commit appends only the batch's
+#: state delta, bounded by the batch's writes rather than the standing
+#: state, and snapshot consolidation moves to the background
+#: maintenance thread. It changes how state is persisted, never what a
+#: batch reads or emits.
 _CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
 
-#: No-data micro-batch suppression inside the drain scope (r15, guide
-#: §1 — measured, the single largest remaining drain fixed cost). An
-#: availableNow drain of a WATERMARKED query runs one extra no-data
-#: micro-batch after the last data batch purely to advance the
-#: watermark and evict state that is about to die with the query
-#: anyway: batch-count decomposition (scripts/profile_drains_r15.py,
-#: StreamingQueryListener) showed q92/q106/q121 each paying a 0.5–0.9 s
-#: batch 1 with numInputRows=0. Every drained RESULT is identical by
-#: construction: the update-mode aggregates (q92/q121) emit each
-#: verdict in the batch that delivered the doc, the inner stream-stream
-#: join (q106) emits on match, and the applyInPandasWithState twins
-#: (q107/q110) use NoTimeout so a no-data batch can never emit —
-#: re-proven against every batch oracle (streaming parity suite +
-#: oracle sweep). The conf is scoped: a CONTINUOUS production stream
-#: keeps the default (no-data batches are how watermarks advance
-#: through quiet periods); a bounded backfill drain has no quiet
-#: period to bridge.
+#: No no-data micro-batches inside the drain scope. A drain of a
+#: watermarked query otherwise runs one extra batch with no input after
+#: the last data batch, only to advance the watermark and evict state
+#: that dies with the query anyway (a zero-input batch in perfbench
+#: ``run.py --trace 1``, ``streaming.batches``). Results cannot change:
+#: the update-mode aggregates (q92/q121) emit each verdict in the batch
+#: that delivered the row, the inner stream-stream join (q106) emits on
+#: match, and the applyInPandasWithState twins (q107/q110) use
+#: NoTimeout, so an empty batch never emits. A continuous stream keeps
+#: the default: no-data batches carry its watermark through quiet
+#: periods, which a bounded drain does not have.
 _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-#: RocksDB row tracking off inside the drain scope (r15, guide §5):
-#: with tracking on, every state-store put/delete pays a point lookup
-#: first just to maintain the numTotalStateRows METRIC — a
-#: read-amplification tax on the write path, linear in the batch's
-#: state writes at any scale. Documented RocksDB state-store tuning
-#: knob; results are unaffected (the metric reads -1). Measured
-#: together with _NODATA_CONF: the seven drains' same-session
-#: best-of-2 sum fell 12.76 → 10.57 s (q92 2.33→1.80, q106 2.67→1.93,
-#: q121 2.61→1.87); trackrows alone 12.76 → 12.29.
+#: RocksDB row tracking off inside the drain scope: with it on, every
+#: state put/delete first pays a point lookup only to maintain the
+#: numTotalStateRows metric. Results are unaffected (the metric reads
+#: -1).
 _TRACKROWS_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 )
@@ -182,6 +156,28 @@ class _stream_state_width:
         for key, old in self._old.items():
             self._spark.conf.set(key, old)
         return False
+
+
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, name: str
+) -> DataFrame:
+    """Run ``writer`` (the caller's ``df.writeStream.outputMode(mode)``)
+    as an availableNow drain into the memory table ``name`` and return
+    that table.
+
+    Only start→await runs inside :class:`_stream_state_width`: the
+    state-store width is fixed at stream start, so callers build the
+    plan outside the scope, where eager pins and sizing passes keep the
+    session's batch width."""
+    with _stream_state_width(spark):
+        q = (
+            writer.format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.table(name)
 
 
 PRICE_BAND_WIDTH = 100_000.0
@@ -631,30 +627,25 @@ def q43_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..streaming.twin import read_events_stream
 
-    with _stream_state_width(spark):
-        ev = read_events_stream(spark, sf_dir)
-        rolled = (
-            ev.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum("value", scale=2).alias("sum_value"),
-            )
-            .select(
-                F.col("win.start").cast("timestamp_ntz").alias("bucket_hour"),
-                "n_events",
-                "sum_value",
-            )
+    rolled = (
+        read_events_stream(spark, sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .groupBy(F.window("ts", "1 hour").alias("win"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value", scale=2).alias("sum_value"),
         )
-        q = (
-            rolled.writeStream.format("memory")
-            .queryName("q43_stream_hourly_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            F.col("win.start").cast("timestamp_ntz").alias("bucket_hour"),
+            "n_events",
+            "sum_value",
         )
-        q.awaitTermination()
-    return spark.table("q43_stream_hourly_sink")
+    )
+    return _drain(
+        spark,
+        rolled.writeStream.outputMode("complete"),
+        "q43_stream_hourly_sink",
+    )
 
 
 def q92_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,28 +675,17 @@ def q92_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(sf_dir)
         .where((F.col("doc_id") % INCR_MOD) == F.lit(INCR_REM))
     )
-    # Build the plan OUTSIDE the state-width scope: the standing band
-    # table's eager pin (streaming/twin.dedup_admit_stream) then
-    # materializes at the session's full batch width; only the stream
-    # START below needs the narrow width (state-store instance count
-    # is fixed at stream start — _stream_state_width docstring).
     admit = dedup_admit_stream(spark, stream, sf_dir)
-    with _stream_state_width(spark):
-        q = (
-            admit
-            .writeStream.format("memory")
-            .queryName("q92_dedup_admit_sink")
-            # UPDATE mode (r5): the admit aggregate is watermarked per
-            # (admission window, doc), so state evicts as the watermark
-            # advances — the unbounded-stream shape. Each doc's verdict
-            # is final in the batch that delivered the doc (the twin's
-            # docstring), so the update rows ARE the verdict set.
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q92_dedup_admit_sink")
+    return _drain(
+        spark,
+        # UPDATE mode: the admit aggregate is watermarked per
+        # (admission window, doc), so state evicts as the watermark
+        # advances — the unbounded-stream shape. Each doc's verdict is
+        # final in the batch that delivered the doc (the twin's
+        # docstring), so the update rows ARE the verdict set.
+        admit.writeStream.outputMode("update"),
+        "q92_dedup_admit_sink",
+    )
 
 
 def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,16 +731,12 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v"),
         )
     )
-    # Plan built OUTSIDE the state-width scope (the q92 rule): the
-    # standing eval index pin and the banding-model sizing pass run at
-    # the session's full batch width; only the stream START needs the
-    # narrow width. r12: the model is derived ONCE here and shared by
-    # the eval index and the probe (ADVICE r11 — the former inline
-    # build sized the corpus twice), and the eval index reads the
-    # ``banded_postings`` stage pin batch-side (similarity.
-    # eval_band_index) so a sharing session bands the corpus once for
-    # q25/q119/q121 together; twin.py stays pin-free (the streaming
-    # audit rule — see STREAM_STATIC_AUDIT below).
+    # The model is derived ONCE here and shared by the eval index and
+    # the probe, and the eval index reads the ``banded_postings`` stage
+    # pin batch-side (similarity.eval_band_index), so a sharing session
+    # bands the corpus once for q25/q119/q121 together; twin.py stays
+    # pin-free (the streaming audit rule — see STREAM_STATIC_AUDIT
+    # below).
     # banding_model (r14): memo-reading handle — inside sharing
     # the corpus-wide sizing pass runs once per session, not per
     # q121 call (the model triple is deterministic per sf_dir).
@@ -776,17 +752,11 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts = decontaminate_stream(
         spark, stream, sf_dir, eval_post=eval_post, model=model
     )
-    with _stream_state_width(spark):
-        q = (
-            verdicts
-            .writeStream.format("memory")
-            .queryName("q121_decontaminate_stream_sink")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q121_decontaminate_stream_sink")
+    return _drain(
+        spark,
+        verdicts.writeStream.outputMode("update"),
+        "q121_decontaminate_stream_sink",
+    )
 
 
 def q100_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,17 +776,12 @@ def q100_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..streaming.twin import read_events_stream, session_report_stream
 
-    with _stream_state_width(spark):
-        q = (
-            session_report_stream(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("q100_stream_sessions_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q100_stream_sessions_sink")
+    sessions = session_report_stream(read_events_stream(spark, sf_dir))
+    return _drain(
+        spark,
+        sessions.writeStream.outputMode("complete"),
+        "q100_stream_sessions_sink",
+    )
 
 
 def q106_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -832,18 +797,14 @@ def q106_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention)."""
     from ..streaming.twin import attribution_stream, read_events_stream
 
-    with _stream_state_width(spark):
-        q = (
-            attribution_stream(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("q106_stream_attribution_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    pairs = attribution_stream(read_events_stream(spark, sf_dir))
+    drained = _drain(
+        spark,
+        pairs.writeStream.outputMode("append"),
+        "q106_stream_attribution_sink",
+    )
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    return spark.table("q106_stream_attribution_sink").select(
+    return drained.select(
         "purchase_id",
         "user_id",
         us("purchase_ts").alias("purchase_ts_us"),
@@ -870,17 +831,12 @@ def q107_stateful_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_streaming.py)."""
     from ..streaming.twin import read_events_stream, stateful_asof_stream
 
-    with _stream_state_width(spark):
-        q = (
-            stateful_asof_stream(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("q107_stateful_asof_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q107_stateful_asof_sink")
+    carried = stateful_asof_stream(read_events_stream(spark, sf_dir))
+    return _drain(
+        spark,
+        carried.writeStream.outputMode("append"),
+        "q107_stateful_asof_sink",
+    )
 
 
 def q110_stream_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,18 +856,15 @@ def q110_stream_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.twin import read_events_stream, stateful_page_rank_stream
     from .rime import map_events_to_rime
 
-    with _stream_state_width(spark):
-        rime_stream = map_events_to_rime(read_events_stream(spark, sf_dir))
-        q = (
-            stateful_page_rank_stream(rime_stream)
-            .writeStream.format("memory")
-            .queryName("q110_stream_page_rank_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q110_stream_page_rank_sink").select(
+    ranks = stateful_page_rank_stream(
+        map_events_to_rime(read_events_stream(spark, sf_dir))
+    )
+    drained = _drain(
+        spark,
+        ranks.writeStream.outputMode("append"),
+        "q110_stream_page_rank_sink",
+    )
+    return drained.select(
         "event_id",
         F.col("session_id").alias("user_id"),
         "committed_text",

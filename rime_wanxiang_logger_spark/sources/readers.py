@@ -41,10 +41,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in STAR_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every star table as a temp view for the SQL API."""
     for t in STAR_TABLES:

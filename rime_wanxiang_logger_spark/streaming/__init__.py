@@ -11,7 +11,6 @@ from .twin import (  # noqa: F401
     run_stream_to_memory,
     session_window_stream,
     stateful_asof_stream,
-    stateful_asof_tws,
     stateful_page_rank_stream,
     stream_to_parquet_foreachbatch,
 )

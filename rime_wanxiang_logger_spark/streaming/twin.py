@@ -372,86 +372,6 @@ def stateful_page_rank_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_asof_tws(events: DataFrame) -> DataFrame:
-    """T2/T4 last-state carry on the MODERN stateful API
-    (``transformWithStateInPandas``, Spark 4): same semantics as
-    ``stateful_asof_stream`` but with typed per-key value state, state
-    TTL support, and timer hooks — the API Spark is converging on for
-    custom streaming state (applyInPandasWithState is the legacy twin).
-
-    Ordering: as with the legacy twin, all of a key's Arrow chunks in
-    a micro-batch are concatenated before ONE (ts, event_id) sort, so
-    the prior_value carry is correct even when a chunk boundary splits
-    a key (the per-chunk-sort caveat this docstring used to carry is
-    closed; multi-chunk parity is tested on the legacy twin, which
-    shares the pattern — the TWS test itself needs protobuf).
-
-    Requires the RocksDB state-store provider and the ``protobuf``
-    package (the TWS state-server protocol is protobuf-framed; absent
-    in this container, so the parity test skips — the operator is the
-    correct surface for protobuf-equipped clusters). At scale RocksDB
-    is what bounds memory for billions of keys (SURVEY §7.3.6).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    def make_processor():
-        # Closure-defined class: pickled by value (multimodal.py rule).
-        class AsofProcessor(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._last = handle.getValueState("last", "last double")
-
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as _pd
-
-                last = (
-                    self._last.get()[0] if self._last.exists() else None
-                )
-                out = []
-                chunks = [pdf for pdf in rows if len(pdf)]
-                if chunks:
-                    whole = _pd.concat(
-                        chunks, ignore_index=True
-                    ).sort_values(["ts", "event_id"])
-                    for row in whole.itertuples(index=False):
-                        if row.event_type == "purchase":
-                            out.append(
-                                (row.event_id, key[0], row.value, last)
-                            )
-                        else:
-                            last = row.value
-                if last is not None:
-                    self._last.update((last,))
-                yield _pd.DataFrame(
-                    out,
-                    columns=[
-                        "event_id",
-                        "user_id",
-                        "value",
-                        "prior_value",
-                    ],
-                )
-
-            def close(self) -> None:
-                pass
-
-        return AsofProcessor()
-
-    return events.select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    ).groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_processor(),
-        outputStructType=(
-            "event_id bigint, user_id bigint, value double, "
-            "prior_value double"
-        ),
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
 def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup (T5 / q21's streaming twin): drop repeat
     deliveries of the same event within the watermark horizon via

@@ -458,62 +458,6 @@ def test_attribution_stream_parity(spark):
         q.stop()
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs the "
-    "protobuf package, absent in this container (no pip install); "
-    "the operator is correct API surface for protobuf-equipped "
-    "clusters",
-)
-def test_transform_with_state_matches_legacy_api(spark):
-    """The modern transformWithStateInPandas twin must produce exactly
-    the legacy applyInPandasWithState results (and thus the batch q09
-    oracle, by transitivity with test_stateful_asof_parity)."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ev = st.read_events_stream(spark, SMALL_SF)
-        q = st.run_stream_to_memory(
-            st.stateful_asof_tws(ev), "asof_tws", "append"
-        )
-        try:
-            got = {
-                r["event_id"]: r["prior_value"]
-                for r in spark.sql("SELECT * FROM asof_tws").collect()
-            }
-            batch = {
-                r["event_id"]: r["prior_value"]
-                for r in q09_asof_enrich(spark, SMALL_SF).collect()
-            }
-            assert got == batch
-        finally:
-            q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-
-
 def test_foreachbatch_parquet_idempotent(spark, tmp_path):
     """M7 sink: availableNow drain through foreachBatch lands every
     event exactly once; a re-drain from the same checkpoint (no new
@@ -937,3 +881,37 @@ def test_stream_state_width_scope_pins_and_restores_conf(spark):
         assert spark.conf.get(_TRACKROWS_CONF) == "false"
     for k, v in before.items():
         assert spark.conf.get(k, "sentinel-unset") == v, k
+
+
+def test_drain_failure_restores_conf_and_stops_stream(spark):
+    """A drain whose stream fails mid-run (extensions._drain) must
+    surface the failure, leave no active stream behind, and restore
+    every conf the drain scope pinned to its value before the drain."""
+    from pyspark.errors import StreamingQueryException
+
+    from rime_wanxiang_logger_spark.operators.extensions import (
+        _drain,
+        _stream_state_width,
+    )
+
+    def pinned_confs():
+        return {
+            key: spark.conf.get(key)
+            if default is None
+            else spark.conf.get(key, default)
+            for key, _, default in _stream_state_width._PINNED
+        }
+
+    before = pinned_confs()
+    failing = st.read_events_stream(spark, SMALL_SF).select(
+        "event_id",
+        F.when(
+            F.col("event_id") >= 0, F.raise_error(F.lit("drain failure probe"))
+        )
+        .cast("string")
+        .alias("boom"),
+    )
+    with pytest.raises(StreamingQueryException, match="drain failure probe"):
+        _drain(spark, failing.writeStream.outputMode("append"), "drain_fail")
+    assert spark.streams.active == []
+    assert pinned_confs() == before
